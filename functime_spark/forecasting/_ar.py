@@ -8,11 +8,14 @@ split of responsibilities:
 - the global linear fit is a distributed MLlib `LinearRegression`
   (normal-equations / L-BFGS over executors — the reference collects
   to a single-node sklearn matrix at conversion.py:105-135);
-- recursive multi-step prediction runs as ONE Arrow pass
-  (`mapInPandas`): each batch of entities carries its lag buffer and
-  the loop over fh happens vectorized in numpy with the broadcast
-  coefficients. The reference's per-step Python loop over Spark jobs
-  (_ar.py:216-270) would pay fh job launches; this pays one.
+- multi-step prediction runs in `predict_from_lags`, the ONE Arrow
+  kernel (`mapInPandas`) shared by every numpy AR forecaster (linear,
+  boosted stumps / depth-2 trees, knn / ann, censored): each batch of
+  entities carries its lag buffer and the loop over fh happens
+  vectorized in numpy; a forecaster supplies only its per-horizon step
+  function and its broadcast payload. The reference's per-step Python
+  loop over Spark jobs (_ar.py:216-270) would pay fh job launches;
+  this pays one.
 """
 
 from __future__ import annotations
@@ -316,15 +319,88 @@ def attach_future_x(
 
 
 def _x_matrix(pdf, x_cols: list, fh: int, n_rows: int):
-    """(rows, fh, n_x) exogenous tensor from the __x_ array columns."""
+    """(rows, fh, n_x) exogenous tensor from the `__x_*` array columns."""
     out = np.zeros((n_rows, fh, len(x_cols)), dtype="float64")
     for j, c in enumerate(x_cols):
-        col = pdf[f"__x_{c}"]
-        for i, arr in enumerate(col):
+        for i, arr in enumerate(pdf[c]):
             a = np.asarray(arr, dtype="float64") if arr is not None else np.zeros(0)
             m = min(fh, len(a))
             out[i, :m, j] = a[:m]
     return out
+
+
+def predict_from_lags(
+    state: DataFrame,
+    fh: int,
+    lags: int,
+    payload,
+    make_step,
+    recursive: bool = True,
+) -> DataFrame:
+    """The one prediction kernel of every numpy AR forecaster: ONE
+    Arrow pass (`mapInPandas`) over the per-entity lag buffers.
+
+    `state` is (entity, __buf, ..., __x_<name>...) — make_y_lag's
+    recursion state, optionally with attach_future_x's exogenous
+    arrays. `payload` is broadcast once; `make_step(payload)` runs once
+    per partition and returns ``step(lag_feats, x_h, h) -> yhat``:
+    lag_feats is lag_1..lag_lags (lag_1 = most recent), x_h the
+    (rows, n_x) exogenous slice for horizon h or None without
+    `__x_*` columns. With `recursive`, each yhat is shifted into the
+    buffer (ref predict_recursive _ar.py:216-270); otherwise every
+    horizon sees the observed lags (ref predict_direct _ar.py:277-330).
+    make_step must not capture a DataFrame or a forecaster: it is
+    pickled to the workers. Output: (entity, step, __yhat), step
+    0-based."""
+    entity = state.columns[0]
+    entity_dtype = dict(state.dtypes)[entity]
+    x_names = [c for c in state.columns if c.startswith("__x_")]
+    b = broadcast_value(state.sparkSession, payload)
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        step = make_step(b.value)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ents = pdf[entity].to_numpy()
+            # state matrix: most recent last; columns = buffer
+            buf = stack_buffers(pdf["__buf"], lags)
+            xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
+            preds = np.empty((len(ents), fh), dtype="float64")
+            for h in range(fh):
+                # lag_1 = buf[:, -1], lag_2 = buf[:, -2], ...
+                feats = buf[:, ::-1][:, :lags]
+                yhat = step(feats, None if xs is None else xs[:, h, :], h)
+                preds[:, h] = yhat
+                if recursive:
+                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
+            yield pd.DataFrame(
+                {
+                    entity: np.repeat(ents, fh),
+                    "step": np.tile(np.arange(fh), len(ents)),
+                    "__yhat": preds.ravel(),
+                }
+            )
+
+    schema = f"{entity} {entity_dtype}, step int, __yhat double"
+    return state.mapInPandas(run, schema=schema)
+
+
+def _linear_step(payload):
+    """Recursive linear step: coef[:lags][j] multiplies lag_{j+1},
+    coef[lags:] the exogenous features at the predicted step."""
+    (w, b), lags = payload
+    w_lag, w_x = w[:lags], w[lags:]
+
+    def step(feats, x_h, h):
+        yhat = feats @ w_lag + b
+        if x_h is not None:
+            yhat = yhat + x_h @ w_x
+        return yhat
+
+    return step
 
 
 def predict_recursive_linear(
@@ -335,90 +411,8 @@ def predict_recursive_linear(
     lags: int,
     n_x: int = 0,
 ) -> DataFrame:
-    """One distributed Arrow pass: per-batch numpy recursion over fh.
-
-    coef[:lags][j] multiplies lag_{j+1} (lag_1 = most recent);
-    coef[lags:] multiplies the exogenous features at the predicted
-    step. Output: (entity, step, yhat), step 0-based. Ref
-    predict_recursive _ar.py:216-270."""
-    entity = y_lag.columns[0]
-    entity_dtype = dict(y_lag.dtypes)[entity]
-    x_names = [c[len("__x_"):] for c in y_lag.columns if c.startswith("__x_")]
-    spark = y_lag.sparkSession
-    b_coef = broadcast_value(spark, (coef, intercept))
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        w, b = b_coef.value
-        w_lag, w_x = w[:lags], w[lags:]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ents = pdf[entity].to_numpy()
-            # state matrix: most recent last; columns = buffer
-            buf = stack_buffers(pdf["__buf"], lags)
-            xs = _x_matrix(pdf, x_names, fh, len(ents)) if n_x else None
-            preds = np.empty((len(ents), fh), dtype="float64")
-            for h in range(fh):
-                # features: lag_1 = buf[:, -1], lag_2 = buf[:, -2], ...
-                feats = buf[:, ::-1][:, :lags]
-                yhat = feats @ w_lag + b
-                if n_x:
-                    yhat = yhat + xs[:, h, :] @ w_x
-                preds[:, h] = yhat
-                buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-            out = pd.DataFrame(
-                {
-                    entity: np.repeat(ents, fh),
-                    "step": np.tile(np.arange(fh), len(ents)),
-                    "yhat": preds.ravel(),
-                }
-            )
-            yield out
-
-    schema = f"{entity} {entity_dtype}, step int, yhat double"
-    return y_lag.mapInPandas(run, schema=schema)
-
-
-def predict_direct_linear(
-    y_lag: DataFrame, models: list, fh: int, lags: int, n_x: int = 0
-) -> DataFrame:
-    """Direct strategy: horizon h uses model_h on the last `lags`
-    observed values (no recursion). Ref predict_direct _ar.py:277-330."""
-    entity = y_lag.columns[0]
-    entity_dtype = dict(y_lag.dtypes)[entity]
-    x_names = [c[len("__x_"):] for c in y_lag.columns if c.startswith("__x_")]
-    spark = y_lag.sparkSession
-    b_models = broadcast_value(spark, models)
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        ms = b_models.value
-        use_fh = min(fh, len(ms))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ents = pdf[entity].to_numpy()
-            buf = stack_buffers(pdf["__buf"], lags)
-            feats = buf[:, ::-1][:, :lags]  # lag_1..lag_lags
-            xs = _x_matrix(pdf, x_names, fh, len(ents)) if n_x else None
-            preds = np.empty((len(ents), fh), dtype="float64")
-            for h in range(fh):
-                w, b = ms[min(h, use_fh - 1)]
-                w_lag, w_x = w[:lags], w[lags:]
-                preds[:, h] = feats @ w_lag + b
-                if n_x:
-                    preds[:, h] += xs[:, h, :] @ w_x
-            out = pd.DataFrame(
-                {
-                    entity: np.repeat(ents, fh),
-                    "step": np.tile(np.arange(fh), len(ents)),
-                    "yhat": preds.ravel(),
-                }
-            )
-            yield out
-
-    schema = f"{entity} {entity_dtype}, step int, yhat double"
-    return y_lag.mapInPandas(run, schema=schema)
+    """Recursive linear forecast over the lag-buffer kernel. The
+    exogenous features are the `n_x` `__x_*` columns attach_future_x
+    put on y_lag (the kernel reads them off the frame); they feed
+    coef[lags:]. Output: (entity, step, __yhat)."""
+    return predict_from_lags(y_lag, fh, lags, ((coef, intercept), lags), _linear_step)

@@ -72,6 +72,21 @@ class Forecaster(SparkStatePickleMixin):
         predictions, used by both predict() and backtest()."""
         raise NotImplementedError
 
+    def _future_state(self, fh: int, X: DataFrame | None) -> DataFrame:
+        """The lag-buffer recursion state, with X_future's exogenous
+        arrays attached when the forecaster was fit with X."""
+        from functime_spark.forecasting._ar import attach_future_x
+
+        state = self.state["y_lag"]
+        x_cols = self.state.get("x_cols") or []
+        if x_cols:
+            if X is None:
+                raise ValueError(
+                    "forecaster was fit with exogenous X; predict needs X_future"
+                )
+            state = attach_future_x(state, X, x_cols, fh, on_short=self._x_on_short)
+        return state
+
     def __call__(self, y: DataFrame, fh: int, X: DataFrame | None = None, X_future: DataFrame | None = None) -> DataFrame:
         return self.fit(y, X).predict(fh, X_future)
 

@@ -14,23 +14,27 @@ Spark-first split:
   collects to a single-node ``HistGradientBoostingClassifier``;
 - the two regressors are :class:`LinearBackend` normal-equation fits on
   the filtered subsets (same scan, two aggregate passes);
-- recursive multi-step prediction runs as ONE Arrow pass: the logistic
-  + two linear coefficient vectors are broadcast and the per-step blend
-  is closed-form numpy, so fh steps cost zero extra Spark jobs.
+- multi-step prediction is the shared lag-buffer kernel
+  (`_ar.predict_from_lags`): the logistic + two linear coefficient
+  vectors are broadcast and the per-step blend is closed-form numpy,
+  so fh steps cost zero extra Spark jobs.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting._ar import LinearBackend, make_reduction, make_y_lag, stack_buffers
+from functime_spark.forecasting._ar import (
+    LinearBackend,
+    make_reduction,
+    make_y_lag,
+    mean_ensemble,
+    predict_from_lags,
+)
 from functime_spark.forecasting.base import Forecaster
-from functime_spark.compat import broadcast_value
 
 
 def _fit_logistic(
@@ -96,6 +100,26 @@ def _newton_step(design, feature_cols, label_col, coef, intercept):
     step = np.linalg.solve(H, g)
     new = np.concatenate([coef, [intercept]]) - step
     return new[:-1], float(new[-1])
+
+
+def _blend_step(blends):
+    """Blend step: P(above) * f_above(X) [+ P(below) * f_below(X)] on
+    lags (+ exogenous features); horizon h uses blends[h], the last
+    blend past its length (one blend for the recursive strategy)."""
+
+    def step(feats, x_h, h):
+        if x_h is not None:
+            feats = np.hstack([feats, x_h])
+        (wc, bc), (wa, ba), below = blends[min(h, len(blends) - 1)]
+        z = feats @ wc + bc
+        prob = 1.0 / (1.0 + np.exp(-np.clip(z, -500, 500)))
+        yhat = prob * (feats @ wa + ba)
+        if below is not None:
+            wb, bb = below
+            yhat = yhat + (1.0 - prob) * (feats @ wb + bb)
+        return yhat
+
+    return step
 
 
 class censored_model(Forecaster):
@@ -175,84 +199,24 @@ class censored_model(Forecaster):
         self.state["y_lag"] = make_y_lag(y, self.lags).persist()
         self._cutoffs_from_y_lag()
 
-    @staticmethod
-    def _apply_blend(feats, blend, thr):
-        (wc, bc), (wa, ba), below = blend
-        z = feats @ wc + bc
-        prob = 1.0 / (1.0 + np.exp(-np.clip(z, -500, 500)))
-        yhat = prob * (feats @ wa + ba)
-        if below is not None:
-            wb, bb = below
-            yhat = yhat + (1.0 - prob) * (feats @ wb + bb)
-        return yhat
-
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from functime_spark.forecasting._ar import attach_future_x, mean_ensemble
-
-        state = self.state["y_lag"]
-        x_cols = self.state.get("x_cols") or []
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            state = attach_future_x(state, X, x_cols, fh, on_short=self._x_on_short)
-        if self.strategy == "recursive":
-            return self._predict_blend(fh, state, recursive=True)
-        if self.strategy == "direct":
-            return self._predict_blend(fh, state, recursive=False)
-        return mean_ensemble(
-            self._predict_blend(fh, state, recursive=True),
-            self._predict_blend(fh, state, recursive=False),
-        )
-
-    def _predict_blend(self, fh: int, y_lag: DataFrame, recursive: bool) -> DataFrame:
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        spark = y_lag.sparkSession
-        thr = float(self.threshold)
-        x_cols = self.state.get("x_cols") or []
-        payload = (
-            self.state["blend"] if recursive else self.state["direct_blends"]
-        )
-        b = broadcast_value(spark, (payload, thr, recursive, x_cols))
-        apply_blend = censored_model._apply_blend
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            from functime_spark.forecasting._ar import _x_matrix
-
-            blend_state, t, rec, x_names = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    feats = buf[:, ::-1][:, :lags]
-                    if x_names:
-                        feats = np.hstack([feats, xs[:, h, :]])
-                    if rec:
-                        yhat = apply_blend(feats, blend_state, t)
-                        preds[:, h] = yhat
-                        buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                    else:
-                        blend = blend_state[min(h, len(blend_state) - 1)]
-                        preds[:, h] = apply_blend(feats, blend, t)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        return y_lag.mapInPandas(run, schema=schema)
+        state = self._future_state(fh, X)
+        preds = None
+        if self.strategy in ("recursive", "ensemble"):
+            preds = predict_from_lags(
+                state, fh, self.lags, [self.state["blend"]], _blend_step
+            )
+        if self.strategy in ("direct", "ensemble"):
+            d = predict_from_lags(
+                state,
+                fh,
+                self.lags,
+                self.state["direct_blends"],
+                _blend_step,
+                recursive=False,
+            )
+            preds = d if preds is None else mean_ensemble(preds, d)
+        return preds
 
 
 class zero_inflated_model(censored_model):

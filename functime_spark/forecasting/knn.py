@@ -23,16 +23,17 @@ centroid buckets only, cutting the scan factor to ~n_probe/n_cells.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from functime_spark.forecasting._ar import make_reduction, make_y_lag, stack_buffers
+from functime_spark.forecasting._ar import (
+    make_reduction,
+    make_y_lag,
+    mean_ensemble,
+    predict_from_lags,
+)
 from functime_spark.forecasting.base import Forecaster
-from functime_spark.compat import broadcast_value
 
 
 def _kmeans(X: np.ndarray, k: int, iters: int = 10, seed: int = 7) -> np.ndarray:
@@ -48,14 +49,20 @@ def _kmeans(X: np.ndarray, k: int, iters: int = 10, seed: int = 7) -> np.ndarray
     return cents
 
 
+def _query(feats: np.ndarray, x_h) -> np.ndarray:
+    """kNN query rows: the lag features, then the exogenous block."""
+    return feats if x_h is None else np.hstack([feats, x_h])
+
+
 def _ivf_knn_step(payload):
-    """fn(feats[E,k]) -> yhat[E] probing the n_probe nearest IVF cells
-    of a cell-sorted reference matrix (bounds = cell offsets). The
-    designed path past the brute scan's bandwidth wall: the per-query
-    scan covers ~n_probe/n_cells of the reference."""
+    """Lag-kernel step probing the n_probe nearest IVF cells of a
+    cell-sorted reference matrix (bounds = cell offsets). The designed
+    path past the brute scan's bandwidth wall: the per-query scan
+    covers ~n_probe/n_cells of the reference."""
     feats_ref, targs_ref, C, bd, k, n_probe = payload
 
-    def step(q: np.ndarray) -> np.ndarray:
+    def step(feats: np.ndarray, x_h, h: int) -> np.ndarray:
+        q = _query(feats, x_h)
         dc = (
             (q * q).sum(1)[:, None]
             - 2.0 * (q @ C.T)
@@ -89,7 +96,7 @@ def _ivf_pack(feats: np.ndarray, targs: np.ndarray, n_cells: int):
 
 
 def _brute_knn_step(ref_payload):
-    """fn(feats[E,k]) -> yhat[E] over the broadcast reference matrix.
+    """Lag-kernel step scanning the whole broadcast reference matrix.
 
     Queries are processed in row chunks that cap the E x n_ref
     distance matrix at ~8M doubles (64 MB): an unchunked step on a
@@ -101,7 +108,8 @@ def _brute_knn_step(ref_payload):
     kk = min(k, feats_ref.shape[0])
     chunk = max(1, (1 << 23) // max(1, feats_ref.shape[0]))
 
-    def step(q: np.ndarray) -> np.ndarray:
+    def step(feats: np.ndarray, x_h, h: int) -> np.ndarray:
+        q = _query(feats, x_h)
         out = np.empty(len(q), dtype="float64")
         for s in range(0, len(q), chunk):
             qq = q[s : s + chunk]
@@ -110,6 +118,23 @@ def _brute_knn_step(ref_payload):
             idx = np.argpartition(d, kk - 1, axis=1)[:, :kk]
             out[s : s + chunk] = targs_ref[idx].mean(1)
         return out
+
+    return step
+
+
+def _direct_knn_step(payload):
+    """Direct-strategy step: horizon h scans reference columns
+    h-1 .. h-1+lags (the direct design slice) plus the exogenous block
+    after all `width` lag columns; queries are the last observed lags
+    for every horizon. Ref predict_direct _ar.py:277-330."""
+    wide, targs, k, lags, width, max_horizons = payload
+
+    def step(feats: np.ndarray, x_h, h: int) -> np.ndarray:
+        lo = min(h, max_horizons - 1)
+        ref = wide[:, lo : lo + lags]
+        if x_h is not None:
+            ref = np.hstack([ref, wide[:, width:]])
+        return _brute_knn_step((np.ascontiguousarray(ref), targs, k))(feats, x_h, h)
 
     return step
 
@@ -257,161 +282,49 @@ class knn(Forecaster):
         return False
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from functime_spark.forecasting._ar import mean_ensemble
+        from functime_spark.pipeline._util import spread_for_cpu
 
         use_ivf = self._route_scale_wall(fh)
-        state = self._future_state(fh, X)
-        if self.strategy == "recursive":
-            return self._predict_recursive(fh, state, use_ivf=use_ivf)
-        if self.strategy == "direct":
-            return self._predict_direct(fh, state)
-        return mean_ensemble(
-            self._predict_recursive(fh, state), self._predict_direct(fh, state)
-        )
-
-    def _future_state(self, fh: int, X: DataFrame | None) -> DataFrame:
-        from functime_spark.forecasting._ar import attach_future_x
-
-        state = self.state["y_lag"]
-        x_cols = self.state.get("x_cols") or []
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            state = attach_future_x(state, X, x_cols, fh, on_short=self._x_on_short)
-        return state
-
-    def _predict_direct(self, fh: int, y_lag: DataFrame) -> DataFrame:
-        """Horizon h scans reference columns h-1 .. h-1+lags (the
-        direct design slice); query features are the last observed
-        lags for every horizon. Ref predict_direct _ar.py:277-330."""
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags, mh = self.lags, self.max_horizons
-        spark = y_lag.sparkSession
-        feats_ref, targs_ref = self.state["train"]
-        x_cols = self.state.get("x_cols") or []
-        width = self._design_width()
-        b = broadcast_value(spark, 
-            (feats_ref, targs_ref, self.n_neighbors, x_cols, width)
-        )
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            from functime_spark.forecasting._ar import _x_matrix
-
-            wide, targs, k, x_names, w = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                base_q = buf[:, ::-1][:, :lags]
-                xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    lo = min(h, mh - 1)
-                    ref = np.ascontiguousarray(
-                        np.hstack([wide[:, lo : lo + lags], wide[:, w:]])
-                        if x_names
-                        else wide[:, lo : lo + lags]
-                    )
-                    step_fn = _brute_knn_step((ref, targs, k))
-                    q = (
-                        np.hstack([base_q, xs[:, h, :]]) if x_names else base_q
-                    )
-                    preds[:, h] = step_fn(q)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
         # the per-entity state frame is tiny after its aggregate, so AQE
         # coalesces it to ONE partition and the whole Arrow scan would run
         # in a single task; spread it across the cluster first (no-op when
         # the frame is already parallel)
-        from functime_spark.pipeline._util import spread_for_cpu
-
-        return spread_for_cpu(y_lag).mapInPandas(run, schema=schema)
-
-    def _predict_recursive(
-        self, fh: int, y_lag: DataFrame, use_ivf: bool = False
-    ) -> DataFrame:
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        spark = y_lag.sparkSession
+        state = spread_for_cpu(self._future_state(fh, X))
         feats_ref, targs_ref = self.state["train"]
         x_cols = self.state.get("x_cols") or []
-        # recursive scan uses the first `lags` reference columns plus
-        # the exogenous block, which sits AFTER all width lag columns —
-        # width > lags under the ensemble strategy, so slice both
-        # blocks explicitly rather than assuming they are adjacent
-        width = self._design_width()
-        ref = (
-            np.ascontiguousarray(
+        lags, width = self.lags, self._design_width()
+        preds = None
+        if self.strategy in ("recursive", "ensemble"):
+            # recursive scan uses the first `lags` reference columns plus
+            # the exogenous block, which sits AFTER all width lag columns —
+            # width > lags under the ensemble strategy, so slice both
+            # blocks explicitly rather than assuming they are adjacent
+            ref = np.ascontiguousarray(
                 np.hstack([feats_ref[:, :lags], feats_ref[:, width:]])
+                if x_cols
+                else feats_ref[:, :lags]
             )
-            if x_cols
-            else np.ascontiguousarray(feats_ref[:, :lags])
-        )
-        if use_ivf:
-            # the auto re-route past the bandwidth wall: one driver
-            # k-means over the already-collected reference (built once,
-            # cached on the fit state), ann-default cell/probe counts
-            ivf = self.state.get("ivf")
-            if ivf is None:
-                ivf = _ivf_pack(ref, targs_ref, n_cells=64)
-                self.state["ivf"] = ivf
-            fs, ts, cents, bounds = ivf
-            payload = (fs, ts, cents, bounds, self.n_neighbors, 4)
-        else:
-            payload = (ref, targs_ref, self.n_neighbors)
-        b = broadcast_value(spark, (use_ivf, payload, x_cols))
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            from functime_spark.forecasting._ar import _x_matrix
-
-            ivf_mode, pl, x_names = b.value
-            step_fn = _ivf_knn_step(pl) if ivf_mode else _brute_knn_step(pl)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    q = buf[:, ::-1][:, :lags]
-                    if x_names:
-                        q = np.hstack([q, xs[:, h, :]])
-                    yhat = step_fn(q)
-                    preds[:, h] = yhat
-                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        # the per-entity state frame is tiny after its aggregate, so AQE
-        # coalesces it to ONE partition and the whole Arrow scan would run
-        # in a single task; spread it across the cluster first (no-op when
-        # the frame is already parallel)
-        from functime_spark.pipeline._util import spread_for_cpu
-
-        return spread_for_cpu(y_lag).mapInPandas(run, schema=schema)
+            if use_ivf:
+                # the auto re-route past the bandwidth wall: one driver
+                # k-means over the already-collected reference (built
+                # once, cached on the fit state), ann-default cell/probe
+                # counts
+                ivf = self.state.get("ivf")
+                if ivf is None:
+                    ivf = _ivf_pack(ref, targs_ref, n_cells=64)
+                    self.state["ivf"] = ivf
+                step, payload = _ivf_knn_step, (*ivf, self.n_neighbors, 4)
+            else:
+                step, payload = _brute_knn_step, (ref, targs_ref, self.n_neighbors)
+            preds = predict_from_lags(state, fh, lags, payload, step)
+        if self.strategy in ("direct", "ensemble"):
+            k, mh = self.n_neighbors, self.max_horizons
+            payload = (feats_ref, targs_ref, k, lags, width, mh)
+            d = predict_from_lags(
+                state, fh, lags, payload, _direct_knn_step, recursive=False
+            )
+            preds = d if preds is None else mean_ensemble(preds, d)
+        return preds
 
 
 class ann(knn):
@@ -465,54 +378,9 @@ class ann(knn):
         self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        # re-pack broadcast payload for the IVF step function; the
-        # centroid space spans lag + exogenous dims when fit with X
-        y_lag = self._future_state(fh, X)
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        spark = y_lag.sparkSession
-        feats_s, targs_s, cents, bounds = self.state["train"]
-        x_cols = self.state.get("x_cols") or []
-        b = broadcast_value(spark, 
-            (feats_s, targs_s, cents, bounds, self.n_neighbors, self.n_probe, x_cols)
-        )
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            from functime_spark.forecasting._ar import _x_matrix
-
-            feats_ref, targs_ref, C, bd, k, n_probe, x_names = b.value
-            step_fn = _ivf_knn_step((feats_ref, targs_ref, C, bd, k, n_probe))
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    q = buf[:, ::-1][:, :lags]
-                    if x_names:
-                        q = np.hstack([q, xs[:, h, :]])
-                    yhat = step_fn(q)
-                    preds[:, h] = yhat
-                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        # the per-entity state frame is tiny after its aggregate, so AQE
-        # coalesces it to ONE partition and the whole Arrow scan would run
-        # in a single task; spread it across the cluster first (no-op when
-        # the frame is already parallel)
         from functime_spark.pipeline._util import spread_for_cpu
 
-        return spread_for_cpu(y_lag).mapInPandas(run, schema=schema)
+        # the centroid space spans lag + exogenous dims when fit with X
+        state = spread_for_cpu(self._future_state(fh, X))
+        payload = (*self.state["train"], self.n_neighbors, self.n_probe)
+        return predict_from_lags(state, fh, self.lags, payload, _ivf_knn_step)

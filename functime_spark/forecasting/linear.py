@@ -9,16 +9,31 @@ ensemble (mean of both — ref _ar.py:337-374).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from functime_spark.forecasting._ar import (
     LinearBackend,
     make_reduction,
     make_y_lag,
-    predict_direct_linear,
+    mean_ensemble,
+    predict_from_lags,
     predict_recursive_linear,
 )
 from functime_spark.forecasting.base import Forecaster
+
+
+def _direct_step(payload):
+    """Direct strategy step: horizon h applies model_h (the last model
+    past max_horizons) to the last observed lags."""
+    models, lags = payload
+
+    def step(feats, x_h, h):
+        w, b = models[min(h, len(models) - 1)]
+        yhat = feats @ w[:lags] + b
+        if x_h is not None:
+            yhat = yhat + x_h @ w[lags:]
+        return yhat
+
+    return step
 
 
 class linear_model(Forecaster):
@@ -105,36 +120,24 @@ class linear_model(Forecaster):
         self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from functime_spark.forecasting._ar import attach_future_x
-
-        y_lag = self.state["y_lag"]
-        x_cols = self.state.get("x_cols") or []
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            y_lag = attach_future_x(y_lag, X, x_cols, fh, on_short=self._x_on_short)
+        y_lag = self._future_state(fh, X)
+        n_x = len(self.state.get("x_cols") or [])
         preds = None
         if self.strategy in ("recursive", "ensemble"):
             coef, b = self.state["recursive_model"]
-            preds = predict_recursive_linear(
-                y_lag, coef, b, fh, self.lags, n_x=len(x_cols)
-            )
+            preds = predict_recursive_linear(y_lag, coef, b, fh, self.lags, n_x=n_x)
         if self.strategy in ("direct", "ensemble"):
-            d = predict_direct_linear(
-                y_lag, self.state["direct_models"], fh, self.lags, n_x=len(x_cols)
+            d = predict_from_lags(
+                y_lag,
+                fh,
+                self.lags,
+                (self.state["direct_models"], self.lags),
+                _direct_step,
+                recursive=False,
             )
-            if preds is None:
-                preds = d
-            else:  # ensemble = mean of recursive + direct (ref _ar.py:357-371)
-                e = preds.columns[0]
-                preds = (
-                    preds.withColumnRenamed("yhat", "__r")
-                    .join(d.withColumnRenamed("yhat", "__d"), on=[e, "step"])
-                    .select(e, "step", ((F.col("__r") + F.col("__d")) / 2).alias("yhat"))
-                )
-        return preds.withColumnRenamed("yhat", "__yhat")
+            # ensemble = mean of recursive + direct (ref _ar.py:357-371)
+            preds = d if preds is None else mean_ensemble(preds, d)
+        return preds
 
 
 class lasso(linear_model):

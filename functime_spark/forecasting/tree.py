@@ -26,13 +26,19 @@ buffer. Lineage is truncated with localCheckpoint every few steps
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting._ar import make_reduction, make_y_lag
+from functime_spark.forecasting._ar import (
+    make_reduction,
+    make_y_lag,
+    mean_ensemble,
+    predict_from_lags,
+)
 from functime_spark.forecasting.base import Forecaster
 from functime_spark.materialize import materialize
-from functime_spark.compat import broadcast_value
 
 _CHECKPOINT_EVERY = 8
 
@@ -136,16 +142,7 @@ class gradient_boosted_model(Forecaster):
         self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from functime_spark.forecasting._ar import attach_future_x, mean_ensemble
-
-        x_cols = self.state.get("x_cols") or []
-        state = self.state["y_lag"]
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            state = attach_future_x(state, X, x_cols, fh, on_short=self._x_on_short)
+        state = self._future_state(fh, X)
         if self.strategy == "direct":
             return self._predict_direct(fh, state)
         if self.strategy == "ensemble":
@@ -613,6 +610,31 @@ class catboost(_native_flavor):
     rsm->featureSubsetStrategy, random_seed->seed, ...)."""
 
 
+def _stump_step(payload):
+    """Stump-ensemble step: F0 + each stump's left/right value, on the
+    lags snapped to the training quantile edges when the fit binned."""
+    f0, stumps, snap_edges = payload
+
+    def step(feats, x_h, h):
+        if snap_edges is not None:
+            # same snap-down rule as training: largest edge <= x
+            # (values below all edges -> edge 0)
+            feats = np.column_stack(
+                [
+                    np.asarray(e)[
+                        np.clip(np.searchsorted(e, feats[:, j], "right") - 1, 0, None)
+                    ]
+                    for j, e in enumerate(snap_edges)
+                ]
+            )
+        yhat = np.full(len(feats), f0)
+        for j, v, dl, dr in stumps:
+            yhat = yhat + np.where(feats[:, j] <= v, dl, dr)
+        return yhat
+
+    return step
+
+
 class boosted_stumps(Forecaster):
     """Exact-greedy depth-1 gradient-boosted stumps, Spark-native.
 
@@ -785,63 +807,42 @@ class boosted_stumps(Forecaster):
         self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from typing import Iterator
+        st = self.state
+        payload = (st["f0"], st["stumps"], st["snap_edges"])
+        return predict_from_lags(st["y_lag"], fh, self.lags, payload, _stump_step)
 
-        import numpy as np
 
-        from functime_spark.forecasting._ar import stack_buffers
+def _d2_step(payload):
+    """Depth-2 tree-ensemble step on the integer bins of lags + exog."""
+    f0, trees, bins, B = payload
 
-        y_lag = self.state["y_lag"]
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        spark = y_lag.sparkSession
-        b = broadcast_value(spark, 
-            (self.state["f0"], self.state["stumps"], self.state["snap_edges"])
+    def child_eval(child, feats):
+        if child[0] == "leaf":
+            return np.full(feats.shape[0], child[1])
+        _, j, v, dl, dr = child
+        return np.where(feats[:, j] <= v, dl, dr)
+
+    def step(raw, x_h, h):
+        if x_h is not None:
+            raw = np.concatenate([raw, x_h], axis=1)
+        # same IEEE binning as training; recursion values outside the
+        # train range clamp into [0, B-1]
+        feats = np.column_stack(
+            [
+                np.zeros(raw.shape[0])
+                if w == 0.0
+                else np.clip(np.floor((raw[:, j] - lo) / w), 0, B - 1)
+                for j, (lo, w) in enumerate(bins)
+            ]
         )
+        yhat = np.full(raw.shape[0], f0)
+        for rj, rv, left, right in trees:
+            yhat = yhat + np.where(
+                feats[:, rj] <= rv, child_eval(left, feats), child_eval(right, feats)
+            )
+        return yhat
 
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            f0, stumps, snap_edges = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    feats = buf[:, ::-1][:, :lags]
-                    if snap_edges is not None:
-                        # same snap-down rule as training: largest
-                        # edge <= x (values below all edges -> edge 0)
-                        feats = np.column_stack(
-                            [
-                                np.asarray(e)[
-                                    np.clip(
-                                        np.searchsorted(e, feats[:, j], "right") - 1,
-                                        0,
-                                        None,
-                                    )
-                                ]
-                                for j, e in enumerate(snap_edges)
-                            ]
-                        )
-                    yhat = np.full(len(ents), f0)
-                    for j, v, dl, dr in stumps:
-                        yhat = yhat + np.where(feats[:, j] <= v, dl, dr)
-                    preds[:, h] = yhat
-                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        return y_lag.mapInPandas(run, schema=schema)
+    return step
 
 
 class boosted_trees_d2(Forecaster):
@@ -1143,85 +1144,7 @@ class boosted_trees_d2(Forecaster):
         self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from typing import Iterator
-
-        import numpy as np
-
-        from functime_spark.forecasting._ar import (
-            _x_matrix,
-            attach_future_x,
-            stack_buffers,
-        )
-
-        y_lag = self.state["y_lag"]
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        x_cols = self.state.get("x_cols") or []
-        state = y_lag
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            state = attach_future_x(y_lag, X, x_cols, fh, on_short=self._x_on_short)
-        spark = y_lag.sparkSession
-        b = broadcast_value(
-            spark,
-            (self.state["f0"], self.state["trees"], self.state["bins"], self.max_bins),
-        )
-
-        def child_eval(child, feats):
-            import numpy as np
-
-            if child[0] == "leaf":
-                return np.full(feats.shape[0], child[1])
-            _, j, v, dl, dr = child
-            return np.where(feats[:, j] <= v, dl, dr)
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            f0, trees, bins, B = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                xmat = (
-                    _x_matrix(pdf, x_cols, fh, len(ents)) if x_cols else None
-                )  # (n, fh, n_x)
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    raw = buf[:, ::-1][:, :lags]
-                    if xmat is not None:
-                        raw = np.concatenate([raw, xmat[:, h, :]], axis=1)
-                    # same IEEE binning as training; recursion values
-                    # outside the train range clamp into [0, B-1]
-                    feats = np.column_stack(
-                        [
-                            np.zeros(raw.shape[0])
-                            if w == 0.0
-                            else np.clip(np.floor((raw[:, j] - lo) / w), 0, B - 1)
-                            for j, (lo, w) in enumerate(bins)
-                        ]
-                    )
-                    yhat = np.full(len(ents), f0)
-                    for rj, rv, left, right in trees:
-                        yhat = yhat + np.where(
-                            feats[:, rj] <= rv,
-                            child_eval(left, feats),
-                            child_eval(right, feats),
-                        )
-                    preds[:, h] = yhat
-                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        return state.mapInPandas(run, schema=schema)
+        st = self.state
+        payload = (st["f0"], st["trees"], st["bins"], self.max_bins)
+        state = self._future_state(fh, X)
+        return predict_from_lags(state, fh, self.lags, payload, _d2_step)

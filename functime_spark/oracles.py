@@ -51,7 +51,7 @@ def _ar_gauss_ctes(lags: int, fh: int) -> list:
     substitution) is numerically stable; each elimination step is a
     generated single-row CTE. Emits coefficients x0..x{lags-1}
     (x_i multiplies lag_{i+1}, most recent first — matching
-    predict_recursive_linear _ar.py:223) and intercept x{lags},
+    predict_recursive_linear's linear step) and intercept x{lags},
     per-entity tails q1..q{lags} + cutoff `low` in `qv`, and chained
     predictions p1..p{fh} with the final CTE named p{fh}."""
     m = lags + 1
@@ -335,7 +335,7 @@ def _direct_linear_ctes(L: int, H: int, pfx: str = "d") -> list:
     """Per-horizon pooled OLS of the DIRECT strategy (ref fit_direct
     _ar.py:53-80): model h trains on features lag_h..lag_{h+L-1}
     (rows i >= L+H-1) but predicts from the LAST L observed values
-    (the direct-forecast time shift — predict_direct_linear applies
+    (the direct-forecast time shift — linear's direct step applies
     model h's coefficients to lag_1..lag_L). Emits per-entity
     predictions in CTEs {pfx}p1..{pfx}pH."""
     m = L + 1

@@ -601,6 +601,54 @@ def test_linear_model_with_exogenous(spark):
         np.testing.assert_allclose(got, want[e], rtol=1e-6)
 
 
+def test_predict_from_lags_short_entity_edge_pads(spark):
+    """Entity "b" has fewer rows than `lags`: the kernel must left-pad
+    its buffer with its first value (stack_buffers), for both the
+    recursive and the direct loop, with one exogenous column."""
+    from functime_spark.forecasting._ar import (
+        attach_future_x,
+        make_y_lag,
+        predict_from_lags,
+    )
+
+    lags, fh = 4, 3
+    hist = {"a": [3.0, 1.0, 4.0, 1.0, 5.0, 9.0], "b": [10.0, 12.0]}
+    rows = [(e, t, v) for e, vals in hist.items() for t, v in enumerate(vals)]
+    fut = {"a": [0.5, -1.0, 2.0], "b": [1.5, 0.25, -3.0]}
+    xrows = [
+        (e, len(hist[e]) + h, x) for e, xs in fut.items() for h, x in enumerate(xs)
+    ]
+    y = spark.createDataFrame(rows, "entity string, t long, y double")
+    X_future = spark.createDataFrame(xrows, "entity string, t long, x double")
+    state = attach_future_x(make_y_lag(y, lags), X_future, ["x"], fh)
+
+    def make_step(payload):
+        def step(lag_feats, x_h, h):
+            return lag_feats.mean(axis=1) + x_h.sum(axis=1)
+
+        return step
+
+    for recursive in (True, False):
+        got = (
+            predict_from_lags(state, fh, lags, None, make_step, recursive=recursive)
+            .toPandas()
+            .sort_values(["entity", "step"])
+        )
+        assert list(got.columns) == ["entity", "step", "__yhat"]
+        for e, vals in hist.items():
+            buf = vals[-lags:]
+            buf = [buf[0]] * (lags - len(buf)) + buf
+            want = []
+            for h in range(fh):
+                yhat = sum(buf) / lags + fut[e][h]
+                want.append(yhat)
+                if recursive:
+                    buf = buf[1:] + [yhat]
+            g = got[got.entity == e]
+            assert g["step"].tolist() == list(range(fh))
+            np.testing.assert_allclose(g["__yhat"].to_numpy(), want, rtol=1e-12)
+
+
 def test_direct_and_ensemble_strategies_all_forecasters(spark):
     """Strategy parity: direct/ensemble must run and produce sane
     output for knn, censored, zero-inflated, and tree forecasters."""
