@@ -114,18 +114,6 @@ class _auto_base(Forecaster):
         self.best_params_: dict = {}
         self.n_fit_trials_: int = 0
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "min_lags": self.min_lags,
-            "max_lags": self.max_lags,
-            "test_size": self.test_size,
-            "n_splits": self.n_splits,
-            "search": self.search,
-            "cfo_max_trials": self.cfo_max_trials,
-            **self.family_kwargs,
-        }
-
     def _space(self) -> list:
         """List of param dicts to try (beyond lags)."""
         return [{}]
@@ -484,16 +472,6 @@ class _auto_smoothing(_auto_base):
             **family_kwargs,
         )
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "test_size": self.test_size,
-            "n_splits": self.n_splits,
-            "search": self.search,
-            "cfo_max_trials": self.cfo_max_trials,
-            **self.family_kwargs,
-        }
-
     def _candidates(self) -> list:
         return [
             {"freq": self.freq, **params, **self.family_kwargs}
@@ -602,6 +580,7 @@ class _fixed_lag_cv(_auto_base):
         n_splits: int = 2,
         target_transform=None,
         search: str = "halving",
+        cfo_max_trials: int = 24,
         **family_kwargs,
     ):
         super().__init__(
@@ -612,19 +591,9 @@ class _fixed_lag_cv(_auto_base):
             n_splits=n_splits,
             target_transform=target_transform,
             search=search,
+            cfo_max_trials=cfo_max_trials,
             **family_kwargs,
         )
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.min_lags,
-            "test_size": self.test_size,
-            "n_splits": self.n_splits,
-            "search": self.search,
-            "cfo_max_trials": self.cfo_max_trials,
-            **self.family_kwargs,
-        }
 
 
 class lasso_cv(_fixed_lag_cv):

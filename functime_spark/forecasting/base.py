@@ -11,6 +11,8 @@ Tungsten handles string group keys natively (SURVEY §4.2).
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -20,6 +22,21 @@ from functime_spark.materialize import materialize as _materialize
 
 
 class Forecaster(SparkStatePickleMixin):
+    """Base of every forecaster. Subclasses follow two conventions:
+
+    - Every constructor parameter is stored under its own name, and a
+      ``**`` catch-all under the catch-all's name (sklearn's
+      get_params rule). `_init_kwargs` reads the constructor
+      signature back off the instance, so the refit clones of
+      backtest / conformalize carry the exact configuration.
+    - `_fit` does not set `cutoffs`. When exactly one other state
+      frame carries a `low` column (make_y_lag's recursion state, a
+      smoothing forecaster's per-entity state), `fit` makes cutoffs
+      that frame's (entity, low) projection, so predict's future
+      ranges read n_entities fitted rows instead of re-aggregating
+      the panel; otherwise the lazy panel aggregate stays.
+    """
+
     # exogenous-coverage policy consumed by attach_future_x at the
     # _predict_values call sites: "raise" (eager check, direct predict)
     # or "drop" (backtest — short entities skip the split, no extra job)
@@ -43,6 +60,13 @@ class Forecaster(SparkStatePickleMixin):
             y.groupBy(p.entity).agg(F.max(p.time).alias("low"))
         )
         self._fit(y, X)
+        lows = [
+            v
+            for k, v in self.state.items()
+            if k != "cutoffs" and isinstance(v, DataFrame) and "low" in v.columns
+        ]
+        if len(lows) == 1:
+            self.state["cutoffs"] = lows[0].select(p.entity, "low")
         return self
 
     def predict(self, fh: int, X: DataFrame | None = None) -> DataFrame:
@@ -107,13 +131,6 @@ class Forecaster(SparkStatePickleMixin):
             if isinstance(val, DataFrame):
                 self.state[key] = _materialize(val)
 
-    def _cutoffs_from_y_lag(self) -> None:
-        """Serve cutoffs from the persisted recursion state (make_y_lag
-        carries `low`) so predict's future ranges read n_entities
-        cached rows instead of re-aggregating the full panel."""
-        yl = self.state["y_lag"]
-        self.state["cutoffs"] = yl.select(yl.columns[0], "low")
-
     # -- evaluation --------------------------------------------------
     def backtest(
         self,
@@ -122,7 +139,6 @@ class Forecaster(SparkStatePickleMixin):
         step_size: int = 1,
         n_splits: int = 5,
         window_size: int | None = None,
-        materialize: bool = True,
         X: DataFrame | None = None,
     ) -> DataFrame:
         """Expanding/sliding-window refit-and-predict; returns stacked
@@ -132,7 +148,7 @@ class Forecaster(SparkStatePickleMixin):
         step join), so irregular panels backtest correctly — the
         reference assumes freq-regular series here.
 
-        The stacked result is localCheckpoint-ed by default: it is tiny
+        The stacked result is always localCheckpoint-ed: it is tiny
         (n_splits x n_entities x test_size rows) while its lineage embeds
         n_splits window-split + refit subtrees. Materializing cuts every
         downstream plan (conformalize / rank / elite) from ~20 re-scans
@@ -141,7 +157,7 @@ class Forecaster(SparkStatePickleMixin):
         reuse in the deep union-of-joins plan (session-sticky row
         duplication — every output row matched a second, column-swapped
         quantile row; spark.sql.exchange.reuse=false confirmed the
-        diagnosis). Pass materialize=False to keep the lazy plan."""
+        diagnosis)."""
         from pyspark.sql import Window
 
         from functime_spark.operators.cross_validation import _annotate, _window_split
@@ -160,7 +176,9 @@ class Forecaster(SparkStatePickleMixin):
         for i, (train, test) in splits.items():
             # refits share self.target_transform (fit-on-transform
             # resets its state each split; the loop is sequential, so
-            # each split's invert sees that split's fitted params)
+            # each split's invert sees that split's fitted params);
+            # set it explicitly for forecasters whose constructor does
+            # not take one
             fitted = type(self)(**self._init_kwargs())
             fitted.target_transform = self.target_transform
             # short-coverage entities (series shorter than this split's
@@ -196,9 +214,8 @@ class Forecaster(SparkStatePickleMixin):
         out = preds[0]
         for nxt in preds[1:]:
             out = out.unionByName(nxt)
-        if materialize:
-            # eager: runs while the annotated frame is still cached
-            out = _materialize(out)
+        # eager: runs while the annotated frame is still cached
+        out = _materialize(out)
         annotated[0].unpersist()
         return out
 
@@ -263,7 +280,19 @@ class Forecaster(SparkStatePickleMixin):
         )
 
     def _init_kwargs(self) -> dict:
-        return {"freq": self.freq}
+        """Constructor kwargs that rebuild this configuration: each
+        named parameter read from the attribute of the same name, plus
+        the ``**`` catch-all's contents from the attribute named like
+        the catch-all (none when no such attribute exists). Values are
+        shared, not copied — target_transform included."""
+        kw = {}
+        sig = inspect.signature(type(self).__init__)
+        for name, param in list(sig.parameters.items())[1:]:
+            if param.kind is param.VAR_KEYWORD:
+                kw.update(getattr(self, name, {}))
+            else:
+                kw[name] = getattr(self, name)
+        return kw
 
 
 def _akey(a: float) -> str:

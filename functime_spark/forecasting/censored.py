@@ -143,16 +143,6 @@ class censored_model(Forecaster):
         if strategy in ("direct", "ensemble") and max_horizons is None:
             raise ValueError("direct/ensemble strategy requires max_horizons")
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "threshold": self.threshold,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            "clf_params": self.clf_params,
-        }
-
     def _fit_blend(self, design: DataFrame, feature_cols: list, target: str):
         """One (classifier, above-reg, below-reg) triple."""
         thr = float(self.threshold)
@@ -197,7 +187,6 @@ class censored_model(Forecaster):
             self.state["direct_blends"] = blends
             design.unpersist()
         self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         state = self._future_state(fh, X)
@@ -240,12 +229,3 @@ class zero_inflated_model(censored_model):
             target_transform=target_transform,
             clf_params=clf_params,
         )
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            "clf_params": self.clf_params,
-        }

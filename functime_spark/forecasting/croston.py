@@ -46,13 +46,6 @@ class croston(Forecaster):
         self.alpha = alpha
         self.variant = variant
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "alpha": self.alpha,
-            "variant": self.variant,
-        }
-
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         p = self.state["panel"]
         a = float(self.alpha)
@@ -97,7 +90,6 @@ class croston(Forecaster):
         # all-zero entities have no nz rows: left join -> null levels
         # -> forecast 0
         self.state["croston"] = materialize(cut.join(lv, on=p.entity, how="left"))
-        self.state["cutoffs"] = self.state["croston"].select(p.entity, "low")
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         p = self.state["panel"]

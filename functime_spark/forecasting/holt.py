@@ -59,14 +59,6 @@ class holt(Forecaster):
         self.beta = beta
         self.phi = phi
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "alpha": self.alpha,
-            "beta": self.beta,
-            "phi": self.phi,
-        }
-
     def _weight_tables(self, kmax: int):
         """u[k] = M^k c, v1[k] = M^k (1,-1)', v2[k] = M^k (0,1)' for
         k = 0..kmax — the position weights of y_t / y_1 / y_2 in the
@@ -156,7 +148,6 @@ class holt(Forecaster):
         self.state["holt"] = materialize(
             state.join(stats.select(p.entity, "low"), on=p.entity)
         )
-        self.state["cutoffs"] = self.state["holt"].select(p.entity, "low")
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         p = self.state["panel"]

@@ -77,16 +77,6 @@ class holt_winters(Forecaster):
         self.gamma = gamma
         self.seasonal = seasonal
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "sp": self.sp,
-            "alpha": self.alpha,
-            "beta": self.beta,
-            "gamma": self.gamma,
-            "seasonal": self.seasonal,
-        }
-
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         p = self.state["panel"]
         m = self.sp
@@ -183,7 +173,6 @@ class holt_winters(Forecaster):
             .applyInPandas(fit_group, schema=schema)
         )
         self.state["hw"] = materialize(state)
-        self.state["cutoffs"] = self.state["hw"].select(p.entity, "low")
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         p = self.state["panel"]

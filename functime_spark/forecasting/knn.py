@@ -175,17 +175,6 @@ class knn(Forecaster):
             )
         self.on_scale_wall = on_scale_wall
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "n_neighbors": self.n_neighbors,
-            "max_train_rows": self.max_train_rows,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            "on_scale_wall": self.on_scale_wall,
-        }
-
     def _scale_evals(self, fh: int) -> float:
         """Predicted brute-force distance-evaluation count for this
         predict call: n_ref * n_entities * fh. n_entities comes from
@@ -234,7 +223,6 @@ class knn(Forecaster):
         self.state.pop("n_entities", None)  # refit may change the panel
         self.state.pop("ivf", None)
         self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
 
     def _route_scale_wall(self, fh: int) -> bool:
         """True when the recursive scan should re-route through IVF.
@@ -365,17 +353,11 @@ class ann(knn):
         self.n_cells = n_cells
         self.n_probe = n_probe
 
-    def _init_kwargs(self) -> dict:
-        kw = super()._init_kwargs()
-        kw.update({"n_cells": self.n_cells, "n_probe": self.n_probe})
-        return kw
-
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         feats, targs = self._collect_train(y, X)
         self.state["train"] = _ivf_pack(feats, targs, self.n_cells)
         self.state.pop("n_entities", None)
         self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         from functime_spark.pipeline._util import spread_for_cpu

@@ -62,18 +62,6 @@ class linear_model(Forecaster):
         if strategy in ("direct", "ensemble") and max_horizons is None:
             raise ValueError("direct/ensemble strategy requires max_horizons")
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            "fit_intercept": self.fit_intercept,
-            "alpha": self.alpha,
-            "l1_ratio": self.l1_ratio,
-            "cd_iters": self.cd_iters,
-        }
-
     def _backend(self) -> LinearBackend:
         reg = self.alpha if self.alpha is not None else self._reg_param
         l1 = self.l1_ratio if self.l1_ratio is not None else self._elastic_net_param
@@ -115,9 +103,7 @@ class linear_model(Forecaster):
                 models.append(backend.fit(design, cols, p.target))
             self.state["direct_models"] = models
             design.unpersist()
-        max_buf = self.lags + (self.max_horizons or 1) - 1
-        self.state["y_lag"] = make_y_lag(y, max(self.lags, max_buf)).persist()
-        self._cutoffs_from_y_lag()
+        self.state["y_lag"] = make_y_lag(y, self.lags).persist()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         y_lag = self._future_state(fh, X)

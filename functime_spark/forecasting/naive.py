@@ -25,7 +25,6 @@ class naive(Forecaster):
             F.max_by(p.target, p.time).alias("__last"),
             F.max(p.time).alias("low"),
         )
-        self.state["cutoffs"] = self.state["y_last"].select(p.entity, "low")
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         p = self.state["panel"]
@@ -44,9 +43,6 @@ class snaive(Forecaster):
         super().__init__(freq=freq, lags=1)
         self.sp = sp
 
-    def _init_kwargs(self) -> dict:
-        return {"freq": self.freq, "sp": self.sp}
-
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         p = self.state["panel"]
         # one hash aggregate (collect + in-expression sort + tail
@@ -61,7 +57,6 @@ class snaive(Forecaster):
         self.state["y_tail"] = y.groupBy(p.entity).agg(
             tail.alias("__tail"), F.max(p.time).alias("low")
         )
-        self.state["cutoffs"] = self.state["y_tail"].select(p.entity, "low")
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         p = self.state["panel"]

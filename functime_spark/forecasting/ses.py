@@ -29,9 +29,6 @@ class ses(Forecaster):
         super().__init__(freq=freq, lags=1)
         self.alpha = alpha
 
-    def _init_kwargs(self) -> dict:
-        return {"freq": self.freq, "alpha": self.alpha}
-
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         p = self.state["panel"]
         a = float(self.alpha)
@@ -56,7 +53,6 @@ class ses(Forecaster):
             F.sum(c * F.col("__y")).alias("__l"), F.max("low").alias("low")
         )
         self.state["ses"] = materialize(lvl)
-        self.state["cutoffs"] = self.state["ses"].select(p.entity, "low")
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         p = self.state["panel"]

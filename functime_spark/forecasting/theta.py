@@ -40,9 +40,6 @@ class theta(Forecaster):
         super().__init__(freq=freq, lags=1)
         self.alpha = alpha
 
-    def _init_kwargs(self) -> dict:
-        return {"freq": self.freq, "alpha": self.alpha}
-
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         p = self.state["panel"]
         a = float(self.alpha)
@@ -98,7 +95,6 @@ class theta(Forecaster):
         # frame — the full-panel window runs exactly twice total
         # (once per aggregate)
         self.state["theta"] = materialize(coef.join(lvl, on=p.entity))
-        self.state["cutoffs"] = self.state["theta"].select(p.entity, "low")
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         p = self.state["panel"]

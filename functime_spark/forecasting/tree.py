@@ -71,18 +71,6 @@ class gradient_boosted_model(Forecaster):
         if strategy in ("direct", "ensemble") and max_horizons is None:
             raise ValueError("direct/ensemble strategy requires max_horizons")
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "max_iter": self.max_iter,
-            "max_depth": self.max_depth,
-            "step_size": self.step_size,
-            "num_trees": self.num_trees,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-        }
-
     def _regressor(self):
         from pyspark.ml.regression import GBTRegressor, RandomForestRegressor
 
@@ -139,7 +127,6 @@ class gradient_boosted_model(Forecaster):
             self.state["direct_models"] = models
             design.unpersist()
         self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         state = self._future_state(fh, X)
@@ -412,9 +399,9 @@ class _native_flavor(gradient_boosted_model):
         strategy: str = "recursive",
         max_horizons: int | None = None,
         target_transform=None,
-        **params,
+        **native_kwargs,
     ):
-        core, extra, dropped = translate_gbt_params(params)
+        core, extra, dropped = translate_gbt_params(native_kwargs)
         super().__init__(
             freq=freq,
             lags=lags,
@@ -423,19 +410,10 @@ class _native_flavor(gradient_boosted_model):
             target_transform=target_transform,
             **core,
         )
-        self._native_kwargs = dict(params)
+        self.native_kwargs = native_kwargs
         self._mllib_extra = extra
         self.dropped_params = dropped
-        self._objective = params.get("objective")
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            **self._native_kwargs,
-        }
+        self._objective = native_kwargs.get("objective")
 
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         y = _enforce_label_constraint(
@@ -535,7 +513,7 @@ class xgboost(_native_flavor):
             "learning_rate": self.step_size,
         }
         rejected = {}
-        for k, v in self._native_kwargs.items():
+        for k, v in self.native_kwargs.items():
             if k in ("max_iter", "step_size", "num_trees"):
                 continue  # backbone names, already folded above
             if k in _XGB_REJECTED:
@@ -584,7 +562,7 @@ class lightgbm(_native_flavor):
             "maxDepth": self.max_depth,
         }
         passthrough = []
-        for k, v in self._native_kwargs.items():
+        for k, v in self.native_kwargs.items():
             if k in ("max_iter", "step_size", "num_trees"):
                 continue  # backbone names, already folded above
             if k in _LGBM_TO_SYNAPSE:
@@ -678,15 +656,6 @@ class boosted_stumps(Forecaster):
         self.n_iter = n_iter
         self.learning_rate = learning_rate
         self.max_candidates = max_candidates
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "n_iter": self.n_iter,
-            "learning_rate": self.learning_rate,
-            "max_candidates": self.max_candidates,
-        }
 
     def _stump_expr(self, stumps, cols):
         """Column expression F0 + sum of fitted stump contributions."""
@@ -804,7 +773,6 @@ class boosted_stumps(Forecaster):
         self.state["stumps"] = stumps
         design.unpersist()
         self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         st = self.state
@@ -896,15 +864,6 @@ class boosted_trees_d2(Forecaster):
         self.n_iter = n_iter
         self.learning_rate = learning_rate
         self.max_bins = max_bins
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "n_iter": self.n_iter,
-            "learning_rate": self.learning_rate,
-            "max_bins": self.max_bins,
-        }
 
     @staticmethod
     def _child_expr(child, bcols):
@@ -1141,7 +1100,6 @@ class boosted_trees_d2(Forecaster):
         self.state["trees"] = trees
         binned.unpersist()
         self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         st = self.state

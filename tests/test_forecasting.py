@@ -1694,6 +1694,146 @@ def test_ann_clone_and_backtest_roundtrip(spark):
         ann(freq="1i", strategy="direct", max_horizons=3)
 
 
+def _naive_i():
+    from functime_spark.forecasting.naive import naive
+
+    return naive(freq="1i")
+
+
+# non-default values for every parameter each exported forecaster
+# names (target_transform aside: backtest shares the instance itself)
+_CLONE_KWARGS = {
+    "naive": {"lags": 3},
+    "snaive": {"sp": 5},
+    "ses": {"alpha": 0.3},
+    "theta": {"alpha": 0.3},
+    "holt": {"alpha": 0.4, "beta": 0.2, "phi": 0.9},
+    "holt_winters": {
+        "sp": 5, "alpha": 0.4, "beta": 0.2, "gamma": 0.3,
+        "seasonal": "multiplicative",
+    },
+    "croston": {"alpha": 0.2, "variant": "sba"},
+    "linear_model": {
+        "lags": 5, "strategy": "direct", "max_horizons": 3,
+        "fit_intercept": False, "alpha": 0.2, "l1_ratio": 0.3, "cd_iters": 7,
+    },
+    "lasso": {"lags": 5, "alpha": 0.2, "cd_iters": 7},
+    "ridge": {"lags": 5, "strategy": "ensemble", "max_horizons": 2},
+    "elastic_net": {"lags": 5, "alpha": 0.2, "l1_ratio": 0.3},
+    "censored_model": {
+        "lags": 5, "threshold": 1.5, "strategy": "direct", "max_horizons": 2,
+        "clf_params": {"max_iter": 5},
+    },
+    "zero_inflated_model": {
+        "lags": 5, "strategy": "ensemble", "max_horizons": 2,
+        "clf_params": {"max_iter": 5},
+    },
+    "knn": {
+        "lags": 5, "n_neighbors": 3, "max_train_rows": 500,
+        "strategy": "direct", "max_horizons": 2, "on_scale_wall": "auto",
+    },
+    "ann": {
+        "lags": 5, "n_neighbors": 3, "n_cells": 8, "n_probe": 2,
+        "max_train_rows": 500, "on_scale_wall": "ignore",
+    },
+    "gradient_boosted_model": {
+        "lags": 5, "max_iter": 7, "max_depth": 3, "step_size": 0.2,
+        "num_trees": 9, "strategy": "direct", "max_horizons": 2,
+    },
+    "random_forest_model": {"lags": 5, "num_trees": 9, "max_depth": 3},
+    "xgboost": {
+        "lags": 5, "strategy": "ensemble", "max_horizons": 2,
+        "n_estimators": 9, "eta": 0.2,
+    },
+    "lightgbm": {"lags": 5, "num_iterations": 9, "num_leaves": 7},
+    "catboost": {"lags": 5, "iterations": 9, "depth": 3},
+    "boosted_stumps": {
+        "lags": 3, "n_iter": 2, "learning_rate": 0.3, "max_candidates": None,
+    },
+    "auto_linear_model": {
+        "min_lags": 2, "max_lags": 6, "test_size": 2, "n_splits": 3,
+        "search": "grid", "cfo_max_trials": 5,
+    },
+    "auto_lasso": {"min_lags": 2, "max_lags": 6, "search": "cfo"},
+    "auto_ridge": {"min_lags": 2, "max_lags": 6, "fit_intercept": False},
+    "auto_elastic_net": {"max_lags": 6, "cd_iters": 7},
+    "auto_knn": {"max_lags": 6, "max_train_rows": 500},
+    "auto_lightgbm": {"max_lags": 6, "num_trees": 9},
+    "flaml_lightgbm": {"max_lags": 6, "step_size": 0.2},
+    "auto_ses": {"test_size": 2, "n_splits": 3, "search": "grid"},
+    "auto_holt": {"search": "cfo", "cfo_max_trials": 5},
+    "auto_hw": {"sp": 5, "seasonal": "multiplicative"},
+    "auto_croston": {"n_splits": 3, "variant": "sba"},
+    "lasso_cv": {"lags": 4, "cfo_max_trials": 7, "search": "cfo"},
+    "ridge_cv": {"lags": 4, "test_size": 2, "fit_intercept": False},
+    "elastic_net_cv": {"lags": 4, "n_splits": 3, "cd_iters": 7},
+    "elite": {
+        "lags": 5, "sp": 5, "top_k": 1, "test_size": 2, "n_splits": 3,
+        "bank": {"naive": _naive_i}, "ensemble_strategy": "lasso",
+    },
+}
+
+
+def _exported_forecasters():
+    import inspect
+
+    import functime_spark.forecasting as fcst
+    from functime_spark.forecasting.base import Forecaster
+
+    return sorted(
+        name
+        for name, obj in vars(fcst).items()
+        if inspect.isclass(obj) and issubclass(obj, Forecaster) and obj is not Forecaster
+    )
+
+
+@pytest.mark.parametrize("name", _exported_forecasters())
+def test_refit_clone_keeps_constructor_values(name):
+    """backtest/conformalize refit type(fc)(**fc._init_kwargs()) on
+    every split: the clone must carry every constructor value —
+    named parameters as attributes, native / family kwargs through
+    the catch-all (a hand-copied kwarg list once dropped elite's
+    bank, so its refits used the default bank)."""
+    import warnings
+
+    import functime_spark.forecasting as fcst
+
+    cls = getattr(fcst, name)
+    kw = {"freq": "1d", **_CLONE_KWARGS[name]}
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # native-param translation notes
+        fc = cls(**kw)
+        clone = type(fc)(**fc._init_kwargs())
+    assert type(clone) is cls
+    clone_kw = clone._init_kwargs()
+    for key, want in kw.items():
+        got = getattr(clone, key) if hasattr(clone, key) else clone_kw[key]
+        assert got == want, (name, key, got, want)
+
+
+def test_elite_custom_bank_backtest_refits_that_bank(spark):
+    """elite(bank={naive}) with top_k=1 blends exactly the naive
+    forecast, so its backtest must equal naive's own backtest; a refit
+    on the default bank would pick snaive on this weekly pattern."""
+    from functime_spark.forecasting.elite import elite
+
+    rows = [
+        (e, t, float(10 * e + (t % 7) ** 2 + 0.1 * t))
+        for e in (1, 2)
+        for t in range(30)
+    ]
+    y = spark.createDataFrame(rows, "entity int, t long, y double")
+    kw = {"test_size": 2, "n_splits": 2}
+    got = _pdf(
+        elite(freq="1i", bank={"naive": _naive_i}, top_k=1).backtest(y, **kw),
+        ("split", "entity", "t"),
+    )
+    want = _pdf(_naive_i().backtest(y, **kw), ("split", "entity", "t"))
+    assert len(got) == 2 * 2 * 2
+    assert got[["split", "entity", "t"]].equals(want[["split", "entity", "t"]])
+    np.testing.assert_allclose(got["y"].to_numpy(), want["y"].to_numpy())
+
+
 def test_holt_vs_numpy(events, events_pdf):
     """holt (r10): the weighted-sum (M-power) formulation must equal
     the LITERAL level/trend recursion, per entity, for both classic
